@@ -25,6 +25,11 @@ Invariants mirroring the wire format (docs/changeset-format.md:24-49):
   update: old has PK cols + changed cols defined; new has changed cols
           defined (PK in new defined only if the PK itself changed)
 
+Row identity is the PK value: an entry touches the row whose PK equals
+its `new` PK values for an insert and its `old` PK values otherwise.
+``ChangesetTable.row_key`` is the one definition every operator (apply,
+concat, rebase, the wire writer) joins or sorts on.
+
 A multi-table changeset is a dict {table_name: ChangesetTable}.
 """
 
@@ -123,22 +128,16 @@ class ChangesetTable:
     info: TableInfo
     df: DataFrame
 
-    # -- helpers ---------------------------------------------------------
-    def pk_cols(self, side_priority: str = "old") -> list[Column]:
-        """Row-identity expressions: PK lives in `old` for update/delete
-        and in `new` for insert (docs/changeset-format.md:30-41)."""
-        first, second = (
-            ("old", "new") if side_priority == "old" else ("new", "old")
-        )
+    def row_key(self, prefix: str = "_k") -> list[Column]:
+        """Which row each entry touches, one column ``<prefix>_<pk>`` per
+        PK column: the value from `new` for inserts and from `old`
+        otherwise (docs/changeset-format.md:30-41)."""
         return [
-            F.coalesce(F.col(f"{first}_{c}"), F.col(f"{second}_{c}")).alias(
-                f"pk_{c}"
-            )
+            F.when(F.col("op") == OP_INSERT, F.col(f"new_{c}"))
+            .otherwise(F.col(f"old_{c}"))
+            .alias(f"{prefix}_{c}")
             for c in self.info.pk
         ]
-
-    def with_pk(self) -> DataFrame:
-        return self.df.select("*", *self.pk_cols())
 
     def count(self) -> int:
         return self.df.count()

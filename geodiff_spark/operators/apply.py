@@ -77,13 +77,7 @@ def apply_table(
     cols = list(info.columns)
 
     t = target.select(*cols, F.lit(True).alias("_present")).alias("t")
-    key = [
-        F.when(F.col("op") == OP_INSERT, F.col(f"new_{c}"))
-        .otherwise(F.col(f"old_{c}"))
-        .alias(f"_k_{c}")
-        for c in info.pk
-    ]
-    e = cs.df.select("*", *key).alias("e")
+    e = cs.df.select("*", *cs.row_key()).alias("e")
 
     cond = reduce(
         lambda a, b: a & b,

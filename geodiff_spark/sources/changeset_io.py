@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import io
 import struct
+from datetime import date, datetime
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,6 +120,24 @@ def _decode_value(buf: memoryview, pos: int):
     raise ValueError(f"bad value type byte {tb:#x} at {pos - 1}")
 
 
+#: Spark types the writer encodes as text (see _encode_value), parsed back
+#: from that text; fromisoformat also reads the writer's millisecond form
+_TEXT_PARSERS = {
+    T.TimestampType: datetime.fromisoformat,
+    T.DateType: date.fromisoformat,
+}
+
+
+def _decode_record(buf: memoryview, pos: int, parsers: list):
+    """-> (values, definedness bits, pos) of one old/new record."""
+    values, bits = [], 0
+    for i, parse in enumerate(parsers):
+        d, v, pos = _decode_value(buf, pos)
+        values.append(parse(v) if parse and v is not None else v)
+        bits |= int(d) << i
+    return values, bits, pos
+
+
 def encode_table_header(info: TableInfo) -> bytes:
     out = io.BytesIO()
     out.write(b"T")
@@ -160,20 +179,12 @@ def write_changeset_file(changeset: dict[str, ChangesetTable], path: str) -> Non
     single local file is inherently driver-bandwidth-bound, but that is
     the contract of this artifact; the executor-side sharded sink is
     :func:`write_changeset_dir`.)"""
-    from pyspark.sql import functions as F
-
     with open(path, "wb") as f:
         for name in sorted(changeset):
             t = changeset[name]
             info = t.info
-            pk = info.pk[0]
             dtypes = [t.df.schema[f"old_{c}"].dataType for c in info.columns]
-            sort_pk = (
-                F.when(F.col("op") == OP_INSERT, F.col(f"new_{pk}"))
-                .otherwise(F.col(f"old_{pk}"))
-                .cast("string")
-            )
-            sdf = t.df.orderBy(F.col("op").asc(), sort_pk.asc())
+            sdf = t.df.orderBy("op", *[k.cast("string") for k in t.row_key()])
 
             def enc_part(rows, info=info, dtypes=dtypes):
                 blob = encode_rows(rows, info, dtypes)
@@ -192,7 +203,8 @@ def read_changeset_file(
 ) -> dict[str, ChangesetTable]:
     """Decode a binary changeset into IR DataFrames. ``schemas`` maps
     table name -> list of Spark DataTypes in column order (the wire
-    format is self-describing per value but the IR is typed)."""
+    format is self-describing per value but the IR is typed); timestamp
+    and date values, text on the wire, are parsed back to datetime/date."""
     with open(path, "rb") as f:
         buf = memoryview(f.read())
     pos = 0
@@ -218,25 +230,19 @@ def read_changeset_file(
             if got_pk != cur.pk or ncol != len(cur.columns):
                 raise ValueError(f"schema mismatch for table {name}")
             tables.setdefault(name, [])
+            parsers = [_TEXT_PARSERS.get(type(dt)) for dt in schemas[name]]
         else:
             if cur is None:
                 raise ValueError("entry before table header")
             op = BYTE_OP[buf[pos]]
             pos += 2  # op + indirect
             n = len(cur.columns)
-            old = [None] * n
-            new = [None] * n
+            old, new = [None] * n, [None] * n
             old_bits = new_bits = 0
             if op in (OP_UPDATE, OP_DELETE):
-                for i in range(n):
-                    d, v, pos = _decode_value(buf, pos)
-                    old[i] = v
-                    old_bits |= int(d) << i
+                old, old_bits, pos = _decode_record(buf, pos, parsers)
             if op in (OP_UPDATE, OP_INSERT):
-                for i in range(n):
-                    d, v, pos = _decode_value(buf, pos)
-                    new[i] = v
-                    new_bits |= int(d) << i
+                new, new_bits, pos = _decode_record(buf, pos, parsers)
             tables[cur.name].append((op, *old, *new, old_bits, new_bits))
 
     out = {}

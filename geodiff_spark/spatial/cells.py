@@ -194,7 +194,7 @@ def parent_udf(cell: Column, parent_res: int) -> Column:
     (spread(x) >> 2s) & M1 (the pyramid_rollup identity), so the parent
     is three shifts + masks on the raw cell id, with the per-row
     resolution read from the header bits. Null inputs stay null (the
-    expression propagates); parent_res must be <= the cell's res, as
+    expression propagates); a cell coarser than parent_res raises, as
     with the numpy kernel."""
     res_c = F.shiftright(cell, RES_SHIFT).bitwiseAND(F.lit(0x1F))
     # per-row shift amount -> the SQL shiftright builtin (the PySpark
@@ -207,11 +207,15 @@ def parent_udf(cell: Column, parent_res: int) -> Column:
     sy = F.call_function(
         "shiftright", F.shiftright(m, 1).bitwiseAND(F.lit(_M1)), shift2
     ).bitwiseAND(F.lit(_M1))
-    return (
+    parent = (
         F.lit(MODE_BIT | (parent_res << RES_SHIFT))
         .bitwiseOR(sx)
         .bitwiseOR(F.shiftleft(sy, 1))
     )
+    return F.when(
+        res_c < parent_res,
+        F.raise_error(F.lit(f"parent_res {parent_res} exceeds the cell's resolution")),
+    ).otherwise(parent)
 
 
 def kring_udf(cell: Column, k: int) -> Column:
@@ -290,11 +294,10 @@ def kring_explode(df, cell_col: str, k: int, res: int, out_col: str = "cell"):
     resulting set is identical to the clamp+array_distinct kernel.
     The double explode keeps the codegen tree O(1) in k; the grid
     coords are staged as columns so the spread trees reference cheap
-    attributes. Requires 2k+1 <= 2^res (asserted) so wrap can't
-    duplicate either."""
+    attributes. When 2k+1 > 2^res the ring wraps onto itself in
+    longitude, so the whole axis is emitted once instead."""
     n = 1 << res
-    if 2 * k + 1 > n:
-        raise ValueError(f"ring {k} covers the whole {n}-cell axis")
+    dx_lo, dx_hi = (-k, k) if 2 * k + 1 <= n else (0, n - 1)
     m = F.col(cell_col).bitwiseAND(F.lit(MORTON_MASK))
     staged = df.withColumns(
         {
@@ -309,7 +312,7 @@ def kring_explode(df, cell_col: str, k: int, res: int, out_col: str = "cell"):
         F.shiftleft(_spread_expr(ny, res), 1)
     )
     return (
-        staged.withColumn("_dx", F.explode(F.sequence(F.lit(-k), F.lit(k))))
+        staged.withColumn("_dx", F.explode(F.sequence(F.lit(dx_lo), F.lit(dx_hi))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-k), F.lit(k))))
         .filter((ny >= 0) & (ny <= n - 1))
         .withColumn(out_col, cell)

@@ -18,6 +18,10 @@ def spark():
         cores=16,
         shuffle_partitions=16,
         extra_confs={
+            # a heap the host can hold: on a host with less RAM than
+            # session.py's 48g default, the heap grows until the kernel
+            # OOM-kills the JVM midway through the suite
+            "spark.driver.memory": "6g",
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="gds_wh_"),
             "spark.ui.showConsoleProgress": "false",
         },

@@ -127,3 +127,31 @@ def test_single_file_sink_is_partition_streamed(spark, tmp_path):
         # skip to next entry by re-decoding via reader — simpler: stop
         break
     assert ops[0] == "delete"  # first entry is a delete (sort head)
+
+
+def test_pages_timestamp_roundtrip(spark, tmp_path):
+    """warc_ts (timestamp) goes on the wire as millisecond text; the
+    reader parses it back, so a pages changeset round-trips exactly and
+    the decoded changeset still applies."""
+    from geodiff_spark.sources.pages import pages_snapshot
+
+    from .conftest import assert_df_equal
+
+    info = TableInfo(
+        name="pages",
+        columns=("url", "warc_ts", "html", "text", "lang", "lat", "lon"),
+        pk=("url",),
+        timestamp_cols=("warc_ts",),
+    )
+    v1, v2 = (pages_snapshot(spark, 60, version=v) for v in (1, 2))
+    cs = diff_table(v1, v2, info)
+    path = str(tmp_path / "pages.diff")
+    write_changeset_file({"pages": cs}, path)
+    back = read_changeset_file(
+        spark, path, {"pages": info},
+        {"pages": [f.dataType for f in v1.schema.fields]},
+    )["pages"]
+    assert dict(back.df.dtypes)["old_warc_ts"] == "timestamp"
+    assert_df_equal(back.df, cs.df)
+    patched = apply_or_raise(v1, back)
+    assert not has_changes({"pages": diff_table(patched, v2, info)})

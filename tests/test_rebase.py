@@ -2,7 +2,8 @@
 tests (pygeodiff/tests/test_concurrent_commits.py:20-67,
 tests/test_concurrent_commits.cpp:297-659): 2_inserts, 2_edits
 (disjoint + conflicting), 2_deletes, update_delete, delete_update,
-plus the insert-id remap cascade.
+plus the insert-id remap cascade, and rows whose PKs share the
+reference's 32-bit fid.
 """
 
 from __future__ import annotations
@@ -147,7 +148,7 @@ def test_no_rebase_needed_paths(spark):
 
 
 def test_text_pk_rebase(spark):
-    """Text PKs hash through djb2-int32 for identity; disjoint edits fine."""
+    """Text PKs are identified by their value; disjoint edits fine."""
     TT = TableInfo(name="t", columns=("code", "v"), pk=("code",))
 
     def mk(rows):
@@ -179,3 +180,52 @@ def test_text_pk_insert_collision_raises(spark):
     ours = mk([("alpha", 1), ("new", 3)])
     with pytest.raises(ValueError, match="text PK"):
         rebase(base, theirs, ours)
+
+
+def djb2_int32(s: str) -> int:
+    """The reference's text-PK fid: h = 33*h + byte, C-int wraparound."""
+    h = 0
+    for b in s.encode():
+        h = (33 * h + b) & 0xFFFFFFFF
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+def test_text_pk_urls_sharing_a_fid_stay_apart(spark):
+    """Two different urls with one djb2 fid: our edit of A over their
+    edit of B passes through unchanged, with no conflict."""
+    a = "https://site93.example.com/p/172777"
+    b = "https://site196.example.com/p/210152"
+    assert djb2_int32(a) == djb2_int32(b) == -2106524192
+    TT = TableInfo(name="t", columns=("url", "text"), pk=("url",))
+
+    def cs(rows_before, rows_after):
+        def df(rows):
+            return spark.createDataFrame(rows, "url string, text string")
+
+        return diff_table(df(rows_before), df(rows_after), TT)
+
+    base = [(a, "base-a"), (b, "base-b")]
+    ours = cs(base, [(a, "client edit"), (b, "base-b")])
+    theirs = cs(base, [(a, "base-a"), (b, "server edit")])
+    rebased, conflicts = rebase_table(ours, theirs)
+    cols = ours.df.columns
+    assert sorted(map(tuple, rebased.df.select(*cols).collect())) == sorted(
+        map(tuple, ours.df.collect())
+    )
+    assert conflicts.count() == 0
+
+
+def test_int64_pks_2_pow_32_apart_stay_apart(spark):
+    """int64 ids that agree in their low 32 bits are different rows: an
+    edit and an insert each pass through, with no conflict or remap."""
+    big = 1 << 32
+    base = ds(spark, BASE + [(1 + big, "far", 11)])
+    theirs = ds(spark, [(1, "a-theirs", 10), (2, "b", 20), (3, "c", 30),
+                        (1 + big, "far", 11), (4, "t4", 1)])
+    ours = ds(spark, BASE + [(1 + big, "far-ours", 11), (4 + big, "o4", 2)])
+    final, conflicts = rebase(base, theirs, ours)
+    assert n_conflicts(conflicts) == 0
+    assert rows_of(final) == sorted(
+        [(1, "a-theirs", 10), (2, "b", 20), (3, "c", 30), (4, "t4", 1),
+         (1 + big, "far-ours", 11), (4 + big, "o4", 2)]
+    )

@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from geodiff_spark import TableInfo
+from geodiff_spark import ChangesetTable, TableInfo
 from geodiff_spark.api import Dataset, rebase
 from geodiff_spark.operators.dedup import ngram_jaccard_pairs
 from geodiff_spark.operators.rebase import _insert_mapping_df, rebase_table
@@ -82,6 +82,40 @@ def test_rebase_module_has_no_collect():
 
     src = inspect.getsource(mod)
     assert ".collect()" not in src
+
+
+def _plan_nodes(plan, out: list[str]) -> list[str]:
+    """Node names of an executed physical plan, through adaptive
+    wrappers, query stages and cached relations."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _plan_nodes(plan.executedPlan(), out)
+    if cls.endswith("QueryStageExec"):
+        return _plan_nodes(plan.plan(), out)
+    out.append(plan.nodeName())
+    for seq in (plan.children(), plan.innerChildren()):
+        for i in range(seq.size()):
+            _plan_nodes(seq.apply(i), out)
+    return out
+
+
+def test_text_pk_rebase_plan_joins_theirs_once_without_python(spark):
+    """The rebased entries of a text-PK table come from ONE join against
+    theirs on the PK value; the Python djb2 fid UDF may only appear in
+    the conflicts plan."""
+    ir = ("op string, old_code string, old_v long, new_code string, "
+          "new_v long, old_bits long, new_bits long")
+    T = TableInfo(name="t", columns=("code", "v"), pk=("code",))
+    ours = ChangesetTable(T, spark.createDataFrame(
+        [("update", "alpha", 1, None, 10, 3, 2), ("insert", None, None, "delta", 4, 0, 3)], ir))
+    theirs = ChangesetTable(T, spark.createDataFrame(
+        [("update", "alpha", 1, None, 11, 3, 2), ("delete", "beta", 2, None, None, 3, 0)], ir))
+    rebased, conflicts = rebase_table(ours, theirs)
+    rebased.df.collect()
+    nodes = _plan_nodes(rebased.df._jdf.queryExecution().executedPlan(), [])
+    assert "ArrowEvalPython" not in nodes
+    assert sum(n.endswith("Join") for n in nodes) == 1, nodes
+    assert conflicts.count() == 1
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from geodiff_spark.spatial.cells import (
     cell_udf,
     decode_np,
     encode_np,
+    kring_explode,
     kring_np,
     kring_udf,
     parent_np,
@@ -74,6 +75,36 @@ def test_parent_udf(spark, pts):
     got = out.sort_values("pid")["p"].to_numpy()
     assert (got == expected).all()
     assert (out.sort_values("pid")["pp"].to_numpy() == expected).all()
+
+
+def test_parent_udf_rejects_finer_parent_keeps_nulls(spark):
+    """A parent_res finer than the cell raises (as parent_np does)
+    instead of returning masked-shift garbage; null cells stay null."""
+    cell = int(encode_np(np.array([10.0]), np.array([20.0]), 4)[0])
+    df = spark.createDataFrame([(cell,), (None,)], "c long")
+    nulls = df.filter(F.col("c").isNull()).select(parent_udf(F.col("c"), 6).alias("p"))
+    assert [r["p"] for r in nulls.collect()] == [None]
+    assert [r["p"] for r in df.select(parent_udf(F.col("c"), 4).alias("p")).collect()] == [cell, None]
+    with pytest.raises(Exception, match="exceeds the cell's resolution"):
+        df.select(parent_udf(F.col("c"), 6)).collect()
+
+
+@pytest.mark.parametrize("res,k", [(3, 2), (2, 3)])
+def test_kring_explode_matches_kring_udf_on_boundary_cells(spark, res, k):
+    """Same cell set per row as explode(array_distinct(kring_udf)) at the
+    pole rows (y=0, y=n-1) and the longitude seam (x=0, x=n-1); (2, 3)
+    has 2k+1 > 2^res, where the ring covers the whole longitude axis."""
+    n = 1 << res
+    xy = [(0, 0), (n - 1, 0), (0, n - 1), (n - 1, n - 1), (0, n // 2),
+          (n - 1, n // 2), (n // 2, 0), (n // 2, n - 1)]
+    x, y = (np.array(v, dtype=np.float64) for v in zip(*xy))
+    cells = encode_np((y + 0.5) / n * 180.0 - 90.0, (x + 0.5) / n * 360.0 - 180.0, res)
+    df = spark.createDataFrame([(i, int(c)) for i, c in enumerate(cells)], "qid long, c long")
+    got = kring_explode(df, "c", k, res).select("qid", "cell").collect()
+    want = df.select(
+        "qid", F.explode(F.array_distinct(kring_udf(F.col("c"), k))).alias("cell")
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def _pip_oracle(px, py, ring):
